@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.GraftSession
+import graft.core.{GQuery, GraftSession}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
@@ -13,9 +13,9 @@ import org.apache.spark.sql.SparkSession
   * min alongside in `queries_min`, every rep in `queries_reps`, and
   * the GC wall-clock charged to the timed reps in `queries_gc_ms` — so
   * a one-off rep swing is attributable (GC vs plan) from the artifact
-  * alone. The cache is cleared between queries so one query's
-  * persisted frames can't tax the next. A failed query lands in
-  * `errors` instead of masquerading as a timing.
+  * alone. The cache is cleared after every run so one query's
+  * persisted frames can't tax the next. A query that fails in any run
+  * lands in `errors`, skips its remaining runs, and reports no timing.
   *
   * Interleaved A/B mode (measurement tooling; the driver never sets
   * it, so its contract run is byte-identical): when `SPARK_GRAFT_AB`
@@ -23,7 +23,8 @@ import org.apache.spark.sql.SparkSession
   * and their timed reps are interleaved round-robin (a,b,a,b,…,
   * `SPARK_GRAFT_AB_REPS` rounds, default 7) within the one session —
   * the only per-query comparison that survives this host's ±25%
-  * cross-run drift. Same one-line JSON, plus an `"ab":true` marker.
+  * cross-run drift. Same one-line JSON, plus an `"ab":true` marker;
+  * `"reps"` is the number of timed reps actually run in either mode.
   */
 object Bench {
   private val Reps = 3
@@ -47,79 +48,52 @@ object Bench {
 
     val abSel = sys.env.get("SPARK_GRAFT_AB")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val headline = abSel match {
-      case Some(sel) => SparkEntry.inventory.filter(q => q.bench && sel(q.name))
-      case None      => SparkEntry.inventory.filter(_.bench)
-    }
-    val medians = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val mins = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val reps = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    val gcMs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val headline = abSel.fold(SparkEntry.inventory)(sel =>
+      SparkEntry.inventory.filter(q => sel(q.name)))
+    val reps = abSel.fold(Reps)(_ => sys.env.getOrElse("SPARK_GRAFT_AB_REPS", "7").toInt)
+    // rep 0 is the untimed warmup (JIT/codegen/scan cache). Default:
+    // each query's reps run back to back. A/B: round r runs every query
+    // once (a,b,…,a,b,…), so host drift hits every query equally.
+    val schedule: Seq[(GQuery, Int)] =
+      if (abSel.isEmpty) headline.flatMap(q => (0 to reps).map(q -> _))
+      else (0 to reps).flatMap(r => headline.map(_ -> r))
+
+    val times = headline.map(q => q.name ->
+      scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
+    val gcTotal = scala.collection.mutable.Map.empty[String, Double].withDefaultValue(0.0)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
 
-    if (abSel.isEmpty) headline.foreach { q =>
-      def once(): Unit =
-        q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      try {
-        once() // warmup, untimed
-        spark.sparkContext.setJobDescription(s"bench:${q.name}")
-        val gc0 = gcMillis()
-        val times = (1 to Reps).map { _ =>
+    schedule.foreach { case (q, r) =>
+      if (!errors.contains(q.name)) {
+        try {
+          if (r > 0) spark.sparkContext.setJobDescription(s"bench:${q.name}:$r")
+          val gc0 = gcMillis()
           val t0 = System.nanoTime()
-          once()
-          (System.nanoTime() - t0) / 1e9
-        }
-        gcMs(q.name) = (gcMillis() - gc0).toDouble
-        spark.sparkContext.setJobDescription(null)
-        medians(q.name) = median(times)
-        mins(q.name) = times.min
-        reps(q.name) = times
-      } catch {
-        case e: Throwable =>
-          errors(q.name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-          System.err.println(s"[bench] ${q.name} failed: ${errors(q.name)}")
-      }
-      // a query that persists frames must not bill the next one
-      spark.catalog.clearCache()
-    } else {
-      // interleaved A/B: a,b,…,a,b,… so host drift hits every query
-      // in every round equally
-      val abReps = sys.env.getOrElse("SPARK_GRAFT_AB_REPS", "7").toInt
-      def once(q: core.GQuery): Unit =
-        q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val ok = headline.filter { q =>
-        try { once(q); spark.catalog.clearCache(); true } // warmup, untimed
-        catch {
-          case e: Throwable =>
+          q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          if (r > 0) {
+            times(q.name) += (System.nanoTime() - t0) / 1e9
+            gcTotal(q.name) += (gcMillis() - gc0).toDouble
+          }
+        } catch {
+          case e: Throwable => // the query drops out of the remaining reps
             errors(q.name) = Option(e.getMessage).getOrElse(e.getClass.getName)
             System.err.println(s"[bench] ${q.name} failed: ${errors(q.name)}")
-            false
         }
-      }
-      val buf = ok.map(q => q.name ->
-        scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
-      ok.foreach(q => gcMs(q.name) = 0.0)
-      for (r <- 1 to abReps; q <- ok) {
-        spark.sparkContext.setJobDescription(s"bench-ab:${q.name}:$r")
-        val gc0 = gcMillis()
-        val t0 = System.nanoTime()
-        once(q)
-        buf(q.name) += (System.nanoTime() - t0) / 1e9
-        gcMs(q.name) += (gcMillis() - gc0).toDouble
         spark.sparkContext.setJobDescription(null)
+        // a query that persists frames must not bill the next run
         spark.catalog.clearCache()
-      }
-      ok.foreach { q =>
-        val times = buf(q.name).toSeq
-        medians(q.name) = median(times)
-        mins(q.name) = times.min
-        reps(q.name) = times
       }
     }
 
-    def jnum(m: collection.Map[String, Double]): String =
+    val ok = headline.filterNot(q => errors.contains(q.name))
+    val medians = ok.map(q => q.name -> median(times(q.name).toSeq))
+    val mins = ok.map(q => q.name -> times(q.name).min)
+    val repTimes = ok.map(q => q.name -> times(q.name).toSeq)
+    val gcMs = ok.map(q => q.name -> gcTotal(q.name))
+
+    def jnum(m: Seq[(String, Double)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-    def jarr(m: collection.Map[String, Seq[Double]]): String =
+    def jarr(m: Seq[(String, Seq[Double])]): String =
       m.map { case (k, vs) =>
         "\"" + k + "\":" + vs.map(v => f"$v%.3f").mkString("[", ",", "]")
       }.mkString("{", ",", "}")
@@ -128,12 +102,12 @@ object Bench {
         "\"" + k + "\":\"" + v.replaceAll("[\\\\\"\\n\\r\\t]", " ").take(120) + "\""
       }.mkString("{", ",", "}")
 
-    val total = medians.values.sum
+    val total = medians.map(_._2).sum
     val abMarker = if (abSel.isDefined) """"ab":true,""" else ""
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$Reps,""" +
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,""" +
         s"""$abMarker"queries":${jnum(medians)},"queries_min":${jnum(mins)},""" +
-        s""""queries_reps":${jarr(reps)},"queries_gc_ms":${jnum(gcMs)},""" +
+        s""""queries_reps":${jarr(repTimes)},"queries_gc_ms":${jnum(gcMs)},""" +
         s""""errors":${jstr(errors)},"sf":"$sfDir"}""")
     spark.stop()
   }

@@ -3,7 +3,7 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.LongType
 
 /** One declared engine query: a Spark implementation plus (when the
   * semantics are ANSI-SQL-expressible) the equivalent DuckDB oracle
@@ -15,21 +15,11 @@ import org.apache.spark.sql.types.DecimalType
 final case class GQuery(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    /** Part of the Bench headline set (scale-safe at sf0.1+). */
-    bench: Boolean = true)
+    oracle: Option[String])
 
 object QueryUtils {
   import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, If, Literal}
   import org.apache.spark.sql.graftbridge._
-
-  /** double → DECIMAL(28,10), value-identical to `.cast` (proven by
-    * DecimalFastSpec) but ~2× cheaper per value and producing
-    * compact-long-backed decimals the Sum fast path can add without
-    * BigDecimal. Retained for per-row decimal consumers; the sum
-    * kernels below skip the Decimal object entirely. */
-  def dec(c: Column): Column =
-    ColumnBridge.column(FastDoubleToDecimal(ColumnBridge.expression(c)))
 
   /** The parse half of the exact-sum split: unscaled(cast(c →
     * DECIMAL(28,10))) as a long, or the out-of-band sentinel when the
@@ -40,7 +30,7 @@ object QueryUtils {
     * CSE a subtree that several buffer expressions share (measured: 3
     * evaluations/row/input when inlined, 1 when pre-projected). */
   def unscaled18(c: Column): Column =
-    ColumnBridge.column(UnscaledOrSentinel(ColumnBridge.expression(c)))
+    ColumnBridge.call(DecimalFast, "unscaled18OrSentinel", LongType)(c)
 
   /** (hi, lo) children for SumScaled128 from a pre-projected parse
     * column `u` and the original double `d` (slow-branch-only). All
@@ -50,8 +40,10 @@ object QueryUtils {
     val ue = ColumnBridge.expression(u)
     val de = ColumnBridge.expression(d)
     val sent = Literal(DecimalSum.Sentinel)
-    val hi = If(EqualTo(ue, sent), SlowSplitHi(de), Literal(0L))
-    val lo = If(EqualTo(ue, sent), SlowSplitLo(de), ue)
+    val hi = If(EqualTo(ue, sent),
+      ColumnBridge.invoke(DecimalSum, "slowHi18", LongType)(de), Literal(0L))
+    val lo = If(EqualTo(ue, sent),
+      ColumnBridge.invoke(DecimalSum, "slowLo18", LongType)(de), ue)
     (hi, lo)
   }
 

@@ -19,6 +19,13 @@ object GraftSession {
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      // one pass over the 40-query inventory compiles ~330 codegen
+      // classes (sf0.001, local[8]). Spark's default 100-entry cache
+      // would evict by hash segment, so what a repeated pass recompiles
+      // would depend on the hash codes of generated source; with room
+      // for several passes a repeat recompiles only the classes whose
+      // source changed between runs
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

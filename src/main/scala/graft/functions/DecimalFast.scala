@@ -1,8 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{AbstractDataType, DataType, Decimal, DecimalType, DoubleType}
+import org.apache.spark.sql.types.Decimal
 
 /** double → DECIMAL(28,10), value-identical to `Cast` but without the
   * per-value `new BigDecimal(String)` parse.
@@ -10,41 +8,18 @@ import org.apache.spark.sql.types.{AbstractDataType, DataType, Decimal, DecimalT
   * Spark's Cast defines the result as
   * `BigDecimal(Double.toString(d))` rounded HALF_UP to scale 10 — the
   * shortest-decimal-representation semantics. The exact-sum kernels
-  * (`QueryUtils.dsum`/`davg`) apply that cast to every aggregated
-  * value, and the BigDecimal construction dominated the measured cost
-  * (q01: 5 casts × 600 k rows ≈ 0.4 s of 1.4 s; plus BigDecimal-backed
-  * inputs force the decimal Sum onto its BigDecimal.add path).
+  * (`QueryUtils.sumDec`/`dsum`/`davg`) apply that cast to every
+  * aggregated value, and the BigDecimal construction dominated the
+  * measured cost (q01: 5 casts × 600 k rows ≈ 0.4 s of 1.4 s).
   *
-  * This expression still goes through `Double.toString` (the value
-  * DEPENDS on it) but parses the plain-notation form directly into a
-  * compact scale-10 long (HALF_UP on the 11th fraction digit, carry
-  * handled), producing a long-backed Decimal whose unscaled value and
-  * scale equal the Cast result exactly. Anything not trivially
+  * The parse tiers below produce the unscaled scale-10 long directly
+  * (HALF_UP on the 11th fraction digit, carry handled), equal to the
+  * Cast result's unscaled value exactly. Anything not trivially
   * parseable — scientific notation (|d| ≥ 1e7 or < 1e-3), NaN/Inf —
   * falls back to the reference path itself, so equality holds by
   * construction there. Property-proven against Cast in
   * DecimalFastSpec.
   */
-case class FastDoubleToDecimal(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType)
-
-  override def dataType: DataType = DecimalType(28, 10)
-
-  override def prettyName: String = "graft_double_to_dec"
-
-  override protected def nullSafeEval(input: Any): Any =
-    DecimalFast.toDec2810(input.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graftbridge.DecimalFast.toDec2810($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object DecimalFast {
   private val Precision = 28
   private val Scale = 10

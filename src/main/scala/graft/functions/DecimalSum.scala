@@ -1,10 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, BinaryExpression, CreateNamedStruct, EqualTo, EvalMode, ExpectsInputTypes, Expression, GreaterThanOrEqual, If, IsNotNull, LessThanOrEqual, Literal, Multiply, Or, Subtract, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, CreateNamedStruct, EvalMode, Expression, GreaterThanOrEqual, If, IsNotNull, LessThanOrEqual, Literal, Multiply, Or, Subtract}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.types.{AbstractDataType, BooleanType, DataType, Decimal, DecimalType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DataType, Decimal, DecimalType, LongType, StructField, StructType}
 
 /** Exact decimal-sum kernel over a pair of longs.
   *
@@ -25,7 +24,7 @@ import org.apache.spark.sql.types.{AbstractDataType, BooleanType, DataType, Deci
   * splits exactly (|unscaled| < 10²⁸ → hi < 10¹⁰), and the two-long
   * window covers |sum| < ~9.2·10²⁶ — ~10× narrower than DECIMAL(38,10),
   * unreachable for this input domain, and GUARDED: the hi accumulator
-  * update is an overflow-checked add (CheckedHiAdd), so an
+  * update is an overflow-checked add (checkedHiAdd), so an
   * out-of-window sum throws like built-in Sum instead of wrapping.
   * Equivalence to `sum(cast(c as DECIMAL(28,10)))` is
   * property-proven in DecimalFastSpec (grouped, windowed, null and
@@ -42,8 +41,13 @@ object DecimalSum {
   val Sentinel: Long = Long.MinValue
 
   /** hi part (truncated division by 10¹⁸) of unscaled(cast) for values
-    * the fast path rejected. Exact for the whole DECIMAL(28,10) domain:
-    * |unscaled| < 10²⁸ → |hi| < 10¹⁰. */
+    * the fast path rejected (rare: |d| ≥ 10⁸ and sub-2⁻²¹ magnitudes);
+    * only evaluated behind a sentinel check. Exact for the whole
+    * DECIMAL(28,10) domain: |unscaled| < 10²⁸ → |hi| < 10¹⁰. NaN/Inf
+    * throw here (NumberFormatException via Decimal(NaN)) where Spark's
+    * Cast returns NULL (ANSI mode included) — a deliberate loud-failure
+    * divergence, unreachable for the benchmark domain and pinned by
+    * SumScaledSpec. */
   def slowHi18(d: Double): Long =
     DecimalFast.toDec2810(d).toJavaBigDecimal.unscaledValue()
       .divide(BaseBig).longValueExact()
@@ -85,112 +89,6 @@ object DecimalSum {
         .add(java.math.BigInteger.valueOf(lo))
       Decimal(new java.math.BigDecimal(bi, 10), 38, 10)
     }
-}
-
-/** unscaled(Cast(d → DECIMAL(28,10))) as a bare long when the plain-
-  * notation fast parse applies (|u| ≤ 10¹⁸ by construction), else
-  * `DecimalSum.Sentinel`. The single expensive node of the split —
-  * consumers reference it from several buffer-update expressions and
-  * HashAggregate's whole-stage-codegen subexpression elimination
-  * evaluates it once per row; window call sites pre-project it as a
-  * named column instead (window update projections do not CSE).
-  */
-case class UnscaledOrSentinel(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_unscaled18"
-
-  override protected def nullSafeEval(input: Any): Any =
-    DecimalFast.unscaled18OrSentinel(input.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graftbridge.DecimalFast.unscaled18OrSentinel($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Exact hi-part of the decimal split for fast-path-rejected doubles
-  * (rare: |d| ≥ 10⁸ and sub-2⁻²¹ magnitudes). NaN/Inf throw here
-  * (NumberFormatException via Decimal(NaN)) where Spark's non-ANSI
-  * Cast would return NULL — a deliberate loud-failure divergence,
-  * unreachable for the benchmark domain, shared with toDec2810.
-  * Only evaluated behind a sentinel check. */
-case class SlowSplitHi(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_slow_hi18"
-
-  override protected def nullSafeEval(input: Any): Any =
-    DecimalSum.slowHi18(input.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graftbridge.DecimalSum.slowHi18($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** lo-part twin of SlowSplitHi. */
-case class SlowSplitLo(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_slow_lo18"
-
-  override protected def nullSafeEval(input: Any): Any =
-    DecimalSum.slowLo18(input.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graftbridge.DecimalSum.slowLo18($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** (long, long) → long overflow-checked hi-accumulator add
-  * (DecimalSum.checkedHiAdd) — out-of-window sums fail loudly like
-  * built-in Sum instead of wrapping. */
-case class CheckedHiAdd(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, LongType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_checked_hi_add"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    DecimalSum.checkedHiAdd(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"org.apache.spark.sql.graftbridge.DecimalSum.checkedHiAdd($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** (hi, lo) longs → exact DECIMAL(38,10); evaluated once per group. */
-case class CombineScaled128(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, LongType)
-  override def dataType: DataType = DecimalType(38, 10)
-  override def prettyName: String = "graft_combine128"
-
-  override protected def nullSafeEval(hi: Any, lo: Any): Any =
-    DecimalSum.combine(hi.asInstanceOf[Long], lo.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (hi, lo) =>
-      s"org.apache.spark.sql.graftbridge.DecimalSum.combine($hi, $lo)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Sum of exact scale-10 decimals represented as (hi, lo) long parts
@@ -243,7 +141,8 @@ case class SumScaled128(
     Seq(
       // guarded hi add: out-of-window |sum| throws instead of wrapping
       // (inner add is safe: |inHi| is in-window on both paths, |carry| ≤ 1)
-      CheckedHiAdd(curHi, legacyAdd(inHi, carry)),
+      ColumnBridge.invoke(DecimalSum, "checkedHiAdd", LongType)(
+        curHi, legacyAdd(inHi, carry)),
       Subtract(newLo, Multiply(carry, base, EvalMode.LEGACY), EvalMode.LEGACY))
   }
 
@@ -266,7 +165,7 @@ case class SumScaled128(
       if (emitStruct) {
         CreateNamedStruct(Seq(Literal("hi"), shi, Literal("lo"), slo))
       } else {
-        CombineScaled128(shi, slo)
+        ColumnBridge.invoke(DecimalSum, "combine", DecimalType(38, 10))(shi, slo)
       },
       Literal.create(null, dataType))
 

@@ -1,12 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Murmur3HashFunction, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Murmur3HashFunction, UnsafeArrayData, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.StringType
 
 /** Per-document signature kernels for the near-dup operators.
   *
@@ -15,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (explode → groupBy(doc_id) → 32 min / 64 conditional-sum slots)
   * materializes a row per token, hashes it through the aggregate map,
   * and pays a doc-keyed exchange — a corpus-wide shuffle at scale for
-  * what is semantically a map. These expressions compute the identical
+  * what is semantically a map. These kernels compute the identical
   * signature in one codegen'd loop per row, so the signature stage
   * becomes scan → project with NO shuffle at any scale.
   *
@@ -93,40 +89,4 @@ object SignatureUtil {
     }
     sig
   }
-}
-
-/** array<string> shingles → array<long>(32) MinHash signature. */
-case class MinHashSigExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash32"
-
-  override protected def nullSafeEval(input: Any): Any =
-    SignatureUtil.minhash(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graftbridge.SignatureUtil.minhash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** array<string> tokens → 64-bit SimHash signature. */
-case class SimHash64Expr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
-
-  override protected def nullSafeEval(input: Any): Any =
-    SignatureUtil.simhash(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graftbridge.SignatureUtil.simhash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -2,6 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge, ShingleUtil, TextKernelUtil}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
 
 /** Column-level text kernels: Spark-first re-expressions of the
   * reference's `clean_text` (reference src/utils.py:5-10, applied at
@@ -9,9 +11,10 @@ import org.apache.spark.sql.functions._
   * extensions a training-data pipeline needs (token stats, quality
   * scoring, language guessing, fingerprinting).
   *
-  * Everything is composed from built-in column functions — no UDFs —
-  * so the whole chain stays inside WholeStageCodegen and is equally
-  * usable in batch and Structured Streaming plans.
+  * Everything is composed from built-in column functions and byte-scan
+  * kernels bound as static calls (ColumnBridge.call) — no UDFs — so
+  * the whole chain stays inside WholeStageCodegen and is equally usable
+  * in batch and Structured Streaming plans.
   */
 object TextFunctions {
 
@@ -31,24 +34,26 @@ object TextFunctions {
     * spelling for the spec. */
   def stripHashtags(c: Column): Column = regexp_replace(c, "#\\w+", "")
 
-  /** F1–F3 in ONE codegen'd byte scan (StripNoiseExpr): equality with
-    * the three sequential regexp_replace passes is property-proven in
-    * TextFunctionsSpec — those were three full java.util.regex passes
-    * per row, the dominant cost of q20/q25. */
+  /** Drop tables for the noise scan, built once so every plan binds
+    * the same references (see ColumnBridge.table). */
+  private val keepAll = TextKernelUtil.punctTable("")
+  private val dropPunct = TextKernelUtil.punctTable(asciiPunctuation)
+
+  /** F1–F3 in ONE codegen'd byte scan (TextKernelUtil.stripNoise):
+    * equality with the three sequential regexp_replace passes is
+    * property-proven in TextFunctionsSpec — those were three full
+    * java.util.regex passes per row, the dominant cost of q20/q25. */
   def stripNoise(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      org.apache.spark.sql.graftbridge.StripNoiseExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
+    ColumnBridge.call(TextKernelUtil, "stripNoise", StringType)(
+      c, ColumnBridge.table(keepAll))
 
   /** F1–F4 fused: the noise scan with the punctuation translate-delete
     * applied to each surviving byte — per-character deletions commute
     * with the emit order, so this equals
     * dropPunctuation(stripNoise(c)) exactly (property-proven). */
   def stripNoiseAndPunct(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      org.apache.spark.sql.graftbridge.StripNoiseExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(c),
-        asciiPunctuation))
+    ColumnBridge.call(TextKernelUtil, "stripNoise", StringType)(
+      c, ColumnBridge.table(dropPunct))
 
   /** F4: delete ASCII punctuation (reference src/utils.py:9). */
   def dropPunctuation(c: Column): Column = translate(c, asciiPunctuation, "")
@@ -78,19 +83,22 @@ object TextFunctions {
       .otherwise("Unknown sentiment")
 
   /** Whitespace tokenizer over a python-stripped string. Codegen'd
-    * byte-scan kernel (graftbridge.WsTokensExpr), output identical to
+    * byte-scan kernel (TextKernelUtil.wsTokens), output identical to
     * split(pyStrip(c), "\\s+") including the [""] result for strings
     * that strip to empty (TextFunctionsSpec proves equality). */
   def tokens(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      org.apache.spark.sql.graftbridge.WsTokensExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
+    ColumnBridge.call(TextKernelUtil, "wsTokens",
+      ArrayType(StringType, containsNull = false))(c)
 
   def tokenCount(c: Column): Column = size(tokens(c))
 
   /** Tiny embedded stopword list for quality scoring. */
   val qualityStopwords: Seq[String] =
     Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
+
+  /** qualityStopwords packed once for tokenStats3; an invalid list
+    * fails at class initialization, not per task. */
+  private val stopPacked = TextKernelUtil.compile(Seq(qualityStopwords))._1
 
   /** Reference spelling, kept for the kernel equivalence spec: the
     * filter lambda is interpreted CodegenFallback — query paths use
@@ -106,13 +114,11 @@ object TextFunctions {
 
   /** [n_tokens, n_stop, char_sum] in ONE codegen'd byte scan over the
     * raw text — no token array materialized, no interpreted HOF lambda
-    * (TokenStatsExpr; equality with the size/filter/aggregate spelling
-    * proven in TextFunctionsSpec). */
+    * (TextKernelUtil.tokenStats; equality with the size/filter/aggregate
+    * spelling proven in TextFunctionsSpec). */
   def tokenStats3(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      org.apache.spark.sql.graftbridge.TokenStatsExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(c),
-        qualityStopwords))
+    ColumnBridge.call(TextKernelUtil, "tokenStats",
+      ArrayType(LongType, containsNull = false))(c, ColumnBridge.table(stopPacked))
 
   /** Content-defined document fingerprint: md5 over the cleaned text.
     * Stable across engines (unlike murmur/xxhash whose seeds differ),
@@ -120,17 +126,30 @@ object TextFunctions {
   def fingerprint(c: Column): Column = md5(cleanText(c))
 
   /** Word n-gram shingles from a token array. Codegen'd tight loop
-    * (graftbridge.WordShinglesExpr) — the HOF spelling
+    * (ShingleUtil.shingles) — the HOF spelling
     * (transform + sequence + element_at + concat_ws) is interpreted
     * CodegenFallback and dominated the dedup queries; output is
     * identical, short/NULL docs yield an empty array. */
-  def wordShingles(toks: Column, n: Int): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      org.apache.spark.sql.graftbridge.WordShinglesExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(toks), n))
+  def wordShingles(toks: Column, n: Int): Column = {
+    require(n >= 1, "shingle size must be >= 1")
+    ColumnBridge.call(ShingleUtil, "shingles", ArrayType(StringType, containsNull = false),
+      propagateNull = false)(toks, lit(n))
+  }
+
+  /** Per-set whole-word hit counts of the marker word sets, all sets in
+    * one byte scan (TextKernelUtil.markerCounts; equal to markerHits per
+    * set, proven in TextFunctionsSpec). The sets must be ASCII \w+ words
+    * of 1..7 bytes, disjoint across sets — checked here, at plan
+    * construction. */
+  def markerCounts(c: Column, sets: Seq[Seq[String]]): Column = {
+    val (words, setIdx, nSets) = TextKernelUtil.compile(sets)
+    ColumnBridge.call(TextKernelUtil, "markerCounts",
+      ArrayType(IntegerType, containsNull = false))(
+      c, ColumnBridge.table(words), ColumnBridge.table(setIdx), lit(nSets))
+  }
 
   /** Language-marker hit count: number of whole-word matches of any of
-    * the marker words. */
+    * the marker words. Reference spelling for the markerCounts spec. */
   def markerHits(c: Column, markers: Seq[String]): Column =
     size(regexp_extract_all(c, lit("\\b(" + markers.mkString("|") + ")\\b"), lit(0)))
 }

@@ -1,9 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -142,30 +139,6 @@ object TextKernelUtil {
     new GenericArrayData(Array[Any](nTok, nStop, chars))
   }
 
-  /** One byte scan reproducing the three sequential regexp_replace
-    * deletions of clean_text — regexp_replace(regexp_replace(
-    * regexp_replace(s, "http\S+|www\S+", ""), "@\w+", ""), "#\w+", "")
-    * — exactly (TextFunctionsSpec proves equality per pass-composition
-    * over corpus + adversarial inputs). Every character class and
-    * literal involved is pure ASCII, so byte-level scanning sees the
-    * regex engine's boundaries (multi-byte UTF-8 units are ≥ 0x80:
-    * non-\s, non-\w).
-    *
-    * Why one scan is enough (the pass interactions are bounded):
-    *  - a URL match's greedy \S+ always extends to the END of its
-    *    non-whitespace run, so pass 1 just truncates each run at the
-    *    leftmost URL start — later passes see truncated runs and no
-    *    new intra-run adjacency is ever created by pass 1;
-    *  - a mention match's greedy \w+ means the character following any
-    *    pass-2 deletion is non-\w, so pass 2 can never create a new
-    *    mention, and '@' decisions are local to the pass-1 stream;
-    *  - the only cross-pass effect left is a '#' whose \w+ begins
-    *    after a CHAIN of deleted mentions ("#@x@y7abc" → pass 2 →
-    *    "#abc" → pass 3 → "") — handled by skipping the mention chain
-    *    in the '#' lookahead;
-    *  - pass 3 runs AFTER pass 2, so text joined by a hashtag deletion
-    *    is never re-examined for mentions ("@#x" → "@"), which the
-    *    left-to-right single scan reproduces for free. */
   /** Bitmap of ASCII bytes to drop at emit time (the translate-delete
     * pass of clean_text). Deleting punctuation AFTER the noise strip
     * commutes with emitting survivors during it: both are per-
@@ -178,6 +151,30 @@ object TextKernelUtil {
     t
   }
 
+  /** One byte scan reproducing the three sequential regexp_replace
+    * deletions of clean_text — regexp_replace(regexp_replace(
+    * regexp_replace(s, "http\S+|www\S+", ""), "@\w+", ""), "#\w+", "")
+    * — exactly (TextFunctionsSpec proves equality per pass-composition
+    * over corpus + adversarial inputs), dropping every surviving byte
+    * whose `drop` entry is set (see punctTable). Every character class
+    * and literal involved is pure ASCII, so byte-level scanning sees
+    * the regex engine's boundaries (multi-byte UTF-8 units are ≥ 0x80:
+    * non-\s, non-\w).
+    *
+    * Why one scan is enough (the pass interactions are bounded):
+    *  - a URL match's greedy \S+ always extends to the END of its
+    *    non-whitespace run, so pass 1 just truncates each run at the
+    *    leftmost URL start — later passes see truncated runs and no
+    *    new intra-run adjacency is ever created by pass 1;
+    *  - a mention match's greedy \w+ means the character following any
+    *    pass-2 deletion is non-\w, so pass 2 can never create a new
+    *    mention, and '@' decisions are local to the pass-1 stream;
+    *  - for the same reason a '#' followed by a deleted mention stays
+    *    a lone '#' after pass 2 ("#@x@y7abc" → pass 2 → "#"), so pass 3
+    *    deletes exactly the '#' that is directly followed by a \w byte;
+    *  - pass 3 runs AFTER pass 2, so text joined by a hashtag deletion
+    *    is never re-examined for mentions ("@#x" → "@"), which the
+    *    left-to-right single scan reproduces for free. */
   def stripNoise(s: UTF8String, drop: Array[Boolean]): UTF8String = {
     val base = s.getBaseObject
     val off = s.getBaseOffset
@@ -211,23 +208,10 @@ object TextKernelUtil {
         var p = i
         while (p < eff) {
           val c = Platform.getByte(base, off + p)
-          if (c == '@' && p + 1 < eff && isWord(Platform.getByte(base, off + p + 1))) {
-            p += 1
+          if ((c == '@' || c == '#') && p + 1 < eff &&
+              isWord(Platform.getByte(base, off + p + 1))) {
+            p += 1 // a mention or hashtag: drop the marker and its \w run
             while (p < eff && isWord(Platform.getByte(base, off + p))) p += 1
-          } else if (c == '#') {
-            var q = p + 1 // lookahead across any deleted-mention chain
-            while (q + 1 < eff && Platform.getByte(base, off + q) == '@' &&
-                isWord(Platform.getByte(base, off + q + 1))) {
-              q += 1
-              while (q < eff && isWord(Platform.getByte(base, off + q))) q += 1
-            }
-            if (q < eff && isWord(Platform.getByte(base, off + q))) {
-              p = q + 1 // drop '#', the mention chain, and the word run
-              while (p < eff && isWord(Platform.getByte(base, off + p))) p += 1
-            } else {
-              if (!drop(c & 0xFF)) { out(o) = c; o += 1 }
-              p += 1
-            }
           } else {
             if (!drop(c & 0xFF)) { out(o) = c; o += 1 }
             p += 1
@@ -238,8 +222,6 @@ object TextKernelUtil {
     }
     UTF8String.fromBytes(out, 0, o)
   }
-
-  private[graftbridge] val NoDrop: Array[Boolean] = new Array[Boolean](256)
 
   /** java.util.regex \b neighbor test: the default (non-UNICODE_
     * CHARACTER_CLASS) Bound node treats '_' and any Unicode
@@ -313,107 +295,4 @@ object TextKernelUtil {
     while (c < nSets) { out(c) = counts(c); c += 1 }
     new GenericArrayData(out)
   }
-}
-
-/** string → string: the URL/mention/hashtag deletions of clean_text in
-  * one byte scan; `dropChars` optionally fuses the subsequent
-  * translate-delete pass into the same scan at zero cost (see
-  * TextKernelUtil.stripNoise). */
-case class StripNoiseExpr(child: Expression, dropChars: String = "")
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_strip_noise"
-
-  // eager: non-ASCII drop chars must fail at plan construction
-  private val drop: Array[Boolean] =
-    if (dropChars.isEmpty) TextKernelUtil.NoDrop
-    else TextKernelUtil.punctTable(dropChars)
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernelUtil.stripNoise(input.asInstanceOf[UTF8String], drop)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dropRef = ctx.addReferenceObj("dropChars", drop, "boolean[]")
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graftbridge.TextKernelUtil.stripNoise($c, $dropRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** string → array<long> [n_tokens, n_stop, char_sum]: everything q23's
-  * three per-doc token statistics need, in ONE byte scan with NO token
-  * array materialized (see TextKernelUtil.tokenStats). */
-case class TokenStatsExpr(child: Expression, stopwords: Seq[String])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-  override def prettyName: String = "graft_token_stats"
-
-  // eager validation: a bad stopword list must fail at plan time, not
-  // per task at first evaluation
-  private val packed: Array[Long] = TextKernelUtil.compile(Seq(stopwords))._1
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernelUtil.tokenStats(input.asInstanceOf[UTF8String], packed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val stopRef = ctx.addReferenceObj("stopWords", packed, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graftbridge.TextKernelUtil.tokenStats($c, $stopRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** string → array<string> whitespace tokens (split(pyStrip(c), "\s+")
-  * parity, see TextKernelUtil.wsTokens). */
-case class WsTokensExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_ws_tokens"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernelUtil.wsTokens(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graftbridge.TextKernelUtil.wsTokens($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** string → array<int> of whole-word marker-set hit counts, one scan
-  * over the text for all sets. */
-case class MarkerCountsExpr(child: Expression, sets: Seq[Seq[String]])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_marker_counts"
-
-  // eager: a marker list violating the pack/disjointness constraints
-  // must fail at plan construction, not per task at first evaluation
-  private val compiled = TextKernelUtil.compile(sets)
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val (w, si, n) = compiled
-    TextKernelUtil.markerCounts(input.asInstanceOf[UTF8String], w, si, n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val (w, si, n) = compiled
-    val wordsRef = ctx.addReferenceObj("markerWords", w, "long[]")
-    val idxRef = ctx.addReferenceObj("markerSetIdx", si, "int[]")
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graftbridge.TextKernelUtil.markerCounts($c, $wordsRef, $idxRef, $n)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

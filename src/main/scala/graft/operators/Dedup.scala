@@ -4,6 +4,7 @@ import graft.core.{GQuery, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Deduplication operators over `documents` — the exact and near-dup
   * families a pretraining-data pipeline runs at corpus scale.
@@ -146,9 +147,9 @@ object Dedup {
     * shingles are filtered, exactly as explode dropped them. */
   def minhashSignatures(s: SparkSession, d: String,
                         maxDocId: Long = 1000L): DataFrame = {
-    import org.apache.spark.sql.graftbridge.{ColumnBridge, MinHashSigExpr}
-    val mhs = ColumnBridge.column(MinHashSigExpr(
-      ColumnBridge.expression(col("sh_arr"))))
+    import org.apache.spark.sql.graftbridge.{ColumnBridge, SignatureUtil}
+    val mhs = ColumnBridge.call(SignatureUtil, "minhash",
+      ArrayType(LongType, containsNull = false))(col("sh_arr"))
     withShingleArr(s, d, maxDocId)
       .filter(size(col("sh_arr")) > 0)
       // two-level projection: the kernel evaluates ONCE into "mhs"
@@ -234,14 +235,13 @@ object Dedup {
     * them. */
   def simhashSignatures(s: SparkSession, d: String,
                         maxDocId: Long = 1000L): DataFrame = {
-    import org.apache.spark.sql.graftbridge.{ColumnBridge, SimHash64Expr}
+    import org.apache.spark.sql.graftbridge.{ColumnBridge, SignatureUtil}
     Tables.documents(s, d)
       .filter(col("doc_id") < maxDocId)
       .select(col("doc_id"), array_distinct(tokens(col("text"))).as("toks"))
       .filter(size(col("toks")) > 0)
       .select(col("doc_id"),
-        ColumnBridge.column(SimHash64Expr(
-          ColumnBridge.expression(col("toks")))).as("simhash"))
+        ColumnBridge.call(SignatureUtil, "simhash", LongType)(col("toks")).as("simhash"))
   }
 
   private val SimhashBands = 8 // 8 bands × 8 bits

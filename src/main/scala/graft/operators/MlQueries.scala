@@ -53,6 +53,10 @@ object MlQueries {
       .agg(sum(col("support_n")).as("support"),
         sum(col("tp_n")).as("tp"),
         sum(col("pred_n")).as("pred_cnt"))
+      // equal to the old inner join only while pred is never NULL
+      // (pred = vec_id % 10, and the fixture ids are never NULL): a
+      // NULL label class would need a NULL pred to pass this filter,
+      // where the equi-join always dropped NULL keys
       .filter(col("support") > 0 && col("pred_cnt") > 0)
       .withColumn("precision", round(col("tp") / col("pred_cnt"), 6))
       .withColumn("recall", round(col("tp") / col("support"), 6))

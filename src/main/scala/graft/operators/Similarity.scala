@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *  - near-dup pairs are blocked by `label` (any cheap blocking key)
   *    to avoid the quadratic cross join.
   *
-  * Per-pair scoring is one codegen'd dot (DotProductExpr); vector
+  * Per-pair scoring is one codegen'd dot (VectorFunctions.dot); vector
   * norms are computed once per ROW before any join, never per pair.
   * `dot/(nrm_a*nrm_b)` is arithmetically identical to the cosine the
   * oracle computes, so round(…,4) parity is unaffected.
@@ -121,7 +121,7 @@ object Similarity {
     * TakeOrderedAndProject (per-partition top-k + driver merge:
     * bounded driver transfer, no corpus shuffle — the cost shape of
     * building any broadcast relation). */
-  private def trainedCentroids(s: SparkSession, emb: DataFrame): Seq[Seq[Double]] = {
+  private def trainedCodebook(s: SparkSession, emb: DataFrame): Array[Array[Double]] = {
     val sample = emb
       .select(col("v"), pmod(xxhash64(col("vec_id")), lit(1L << 20)).as("h"),
         col("vec_id"))
@@ -130,26 +130,16 @@ object Similarity {
       .select("v")
       .collect()
       .map(_.getSeq[Double](0).toArray)
-    graft.ml.CodebookKMeans.train(sample, CodebookK, CodebookIters)
-      .toSeq.map(_.toSeq)
+    unitCodebook(graft.ml.CodebookKMeans.train(sample, CodebookK, CodebookIters))
   }
-
-  /** Per-row codegen'd bucket assignment against the driver-local
-    * codebook (IvfTopBucketsExpr): top-`top` centroid ids by cosine,
-    * ties to the smaller id. */
-  private def topBuckets(v: org.apache.spark.sql.Column,
-      code: Seq[Seq[Double]], top: Int): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      org.apache.spark.sql.graftbridge.IvfTopBucketsExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(v), code, top))
 
   /** (vec_id, bucket): primary (rank-1) trained-codebook assignment —
     * exposed for the bucket-balance spec; not a declared query. */
   private[graft] def ivfBucketsForSpec(s: SparkSession, d: String): DataFrame = {
     val emb = withNorm(s, d).select("vec_id", "v", "nrm")
-    val code = trainedCentroids(s, emb)
+    val book = trainedCodebook(s, emb)
     emb.select(col("vec_id").as("c_id"),
-      element_at(topBuckets(col("v"), code, 1), 1).as("bucket"))
+      element_at(ivfTopBuckets(col("v"), book, 1), 1).as("bucket"))
   }
 
   /** IVF-style approximate NN under the trained codebook.
@@ -172,13 +162,13 @@ object Similarity {
     * balance and determinism on the fixture. */
   def annIvf(s: SparkSession, d: String): DataFrame = {
     val emb = withNorm(s, d).select("vec_id", "v", "nrm")
-    val code = trainedCentroids(s, emb)
+    val book = trainedCodebook(s, emb) // one table reference for both sides
     val cands = emb.filter(col("vec_id") >= NQueries)
       .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"),
-        explode(topBuckets(col("v"), code, IndexReplication)).as("bucket"))
+        explode(ivfTopBuckets(col("v"), book, IndexReplication)).as("bucket"))
     val probes = emb.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"),
-        explode(topBuckets(col("v"), code, ProbeBuckets)).as("bucket"))
+        explode(ivfTopBuckets(col("v"), book, ProbeBuckets)).as("bucket"))
     val wTop = Window.partitionBy("q_id").orderBy(col("sim").desc, col("c_id"))
     cands.join(broadcast(probes), "bucket")
       .withColumn("sim", round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))

@@ -84,7 +84,7 @@ object TextQueries {
   /** Quality scoring: stopword ratio, mean token length, bucketing —
     * the length/punct/stopword heuristics of a pretraining filter. */
   def qualityScore(s: SparkSession, d: String): DataFrame = {
-    // ALL three stats in one byte-scan kernel (TokenStatsExpr): the
+    // ALL three stats in one byte-scan kernel (tokenStats3): the
     // r21 spelling tokenized once but then walked the token array
     // three more times, two of them through interpreted CodegenFallback
     // lambdas (filter/aggregate HOFs) — the last interpreted
@@ -132,8 +132,10 @@ object TextQueries {
   val esMarkers = Seq("el", "los", "las", "de", "y")
   val deMarkers = Seq("der", "die", "das", "und", "ist")
 
+  val langMarkerSets: Seq[Seq[String]] = Seq(enMarkers, frMarkers, esMarkers, deMarkers)
+
   def langGuess(s: SparkSession, d: String): DataFrame =
-    // all four marker counts in ONE byte-scan pass (MarkerCountsExpr):
+    // all four marker counts in ONE byte-scan pass (markerCounts):
     // the regexp_extract_all spelling ran four full-text regex scans
     // per row. Whole-word counts are identical (the sets are disjoint
     // and a \b(w)\b match is exactly a maximal \w-run equal to w —
@@ -141,10 +143,7 @@ object TextQueries {
     // so the kernel evaluates once.
     Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
-        org.apache.spark.sql.graftbridge.ColumnBridge.column(
-          org.apache.spark.sql.graftbridge.MarkerCountsExpr(
-            org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("text")),
-            Seq(enMarkers, frMarkers, esMarkers, deMarkers))).as("mc"))
+        markerCounts(col("text"), langMarkerSets).as("mc"))
       .select(col("doc_id"), col("lang"),
         element_at(col("mc"), 1).cast("long").as("en_n"),
         element_at(col("mc"), 2).cast("long").as("fr_n"),

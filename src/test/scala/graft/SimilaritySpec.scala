@@ -90,26 +90,32 @@ class SimilaritySpec extends AnyFunSuite {
     assert(snap() === snap())
   }
 
-  test("aggregate-argmax bucket assignment equals the window rank-1 spelling") {
-    import graft.functions.VectorFunctions._
-    import org.apache.spark.sql.expressions.Window
-    val emb = core.Tables.embeddings(spark, sf)
-      .select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", norm2(col("v")))
-    val centroids = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cent_id"), col("v").as("centv"), col("nrm").as("centn"))
-    val simToCent = emb.join(broadcast(centroids))
-      .withColumn("csim", dot(col("v"), col("centv")) / (col("nrm") * col("centn")))
-    val w = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cent_id"))
-    val want = simToCent.withColumn("crank", row_number().over(w))
-      .filter(col("crank") === 1)
-      .select(col("vec_id"), col("cent_id").as("bucket"))
-      .orderBy("vec_id").collect().map(_.toSeq).toSeq
-    val got = simToCent.groupBy("vec_id")
-      .agg(max(struct(col("csim"), negate(col("cent_id")).as("negc"), col("cent_id"))).as("m"))
-      .select(col("vec_id"), col("m.cent_id").as("bucket"))
-      .orderBy("vec_id").collect().map(_.toSeq).toSeq
-    assert(got === want)
+  test("IVF top-bucket binding equals a driver-side brute-force cosine sort") {
+    import spark.implicits._
+    val vecs = core.Tables.embeddings(spark, sf)
+      .select(col("vec_id"), VectorFunctions.toDoubleArray(col("embedding")))
+      .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    // eight corpus vectors plus an exact tie: centroid 8 is 2 × centroid
+    // 3, so both unit-normalise to the same row and every ranking that
+    // reaches one must list 3 before 8
+    val book = VectorFunctions.unitCodebook(vecs.take(8).map(_._2) :+ vecs(3)._2.map(_ * 2))
+    assert(book(3) sameElements book(8))
+    val top = 3
+    // cosine ranks as the dot with the unit centroid (|v| is a positive
+    // per-row constant); descending, ties to the smaller centroid id
+    def brute(v: Array[Double]): Seq[Long] = {
+      val sims = book.map(c => v.indices.foldLeft(0.0)((s, i) => s + v(i) * c(i)))
+      book.indices.sortWith((a, b) => sims(a) > sims(b) || (sims(a) == sims(b) && a < b))
+        .take(top).map(_.toLong)
+    }
+    val input = (vecs.toSeq.map { case (id, v) => (id, Option(v.toSeq)) } ++
+      Seq((-1L, Some(Seq(1.0, 2.0, 3.0))), (-2L, None))).toDF("id", "v")
+    val got = input.select(col("id"), VectorFunctions.ivfTopBuckets(col("v"), book, top))
+      .collect().map(r => r.getLong(0) -> Option(r.getSeq[Long](1))).toMap
+    vecs.foreach { case (id, v) => assert(got(id) === Some(brute(v)), s"vec_id $id") }
+    assert(vecs.exists { case (_, v) => brute(v).take(2) == Seq(3L, 8L) }, "tie never reached")
+    assert(got(-1L) === Some(Seq.empty), "a wrong-dimension vector must give an empty array")
+    assert(got(-2L) === None, "a NULL vector must give NULL")
   }
 
 }

@@ -133,6 +133,24 @@ class SumScaledSpec extends AnyFunSuite {
     assert(got.collect().toSeq === want.collect().toSeq)
   }
 
+  test("NaN/±Inf input throws in sumDec where sum over the cast gives NULL") {
+    import spark.implicits._
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).foreach { bad =>
+      val df = Seq(bad).toDF("v")
+      // the fast parse returns the sentinel for non-finite values, so
+      // this runs the slow split path, which must fail loudly
+      val (withU, agg) = newSum(df, col("v"))
+      val e = intercept[Exception](withU.agg(agg).collect())
+      assert(causes(e).exists(_.isInstanceOf[NumberFormatException]), s"$bad: $e")
+      // the documented divergence: Cast maps the value to NULL, ANSI
+      // mode included, so the reference sum is NULL
+      val ref = df.agg(refSum(col("v"))).head()
+      assert(ref.isNullAt(0), s"$bad: $ref")
+    }
+  }
+
   test("hi-guard torture: out-of-window sums fail loudly instead of wrapping") {
     import org.apache.spark.sql.graftbridge.{ColumnBridge, SumScaled128}
     import spark.implicits._

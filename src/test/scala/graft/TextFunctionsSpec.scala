@@ -53,7 +53,7 @@ class TextFunctionsSpec extends AnyFunSuite {
   }
 
   test("codegen'd word shingles equal the HOF spelling over the corpus") {
-    // the optimized WordShinglesExpr must reproduce the original
+    // the shingle kernel must reproduce the original
     // transform/sequence/element_at/concat_ws chain element-for-element
     def hofShingles(toks: org.apache.spark.sql.Column, n: Int) =
       when(size(toks) >= n,
@@ -133,7 +133,7 @@ class TextFunctionsSpec extends AnyFunSuite {
       "x@httpyy z", "pre http://u post", "two http://a http://b urls",
       "@user x", "@@abc", "@a@b", "x@y#z", "@x#y", "#@abc", "#@#x", "x#@ay",
       "#tag y", "##x", "#x#y", "#ab@cd ef", "#ab@cd-x", "#ab@cdxy", "@#x y",
-      "@#ab", "#@x@y7abc", "#@x-abc", "#@xy7abc", "#@x abc", "#", "@", "#@",
+      "@#ab", "@#x", "#@x@y7abc", "#@x!abc", "#@x-abc", "#@xy7abc", "#@x abc", "#", "@", "#@",
       "a# b@ c", "é@x #é #aé @aé", "@é", "#é", "mid#tag mid@user",
       "@_x #_y", "@1 #2", "trail@ trail# ",
       "  #Tag @user http://x.com/a?b=1 words READ!!\t")
@@ -198,10 +198,7 @@ class TextFunctionsSpec extends AnyFunSuite {
 
   test("one-pass marker counts equal the four regexp_extract_all scans") {
     import graft.operators.TextQueries._
-    val sets = Seq(enMarkers, frMarkers, esMarkers, deMarkers)
-    val mc = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      org.apache.spark.sql.graftbridge.MarkerCountsExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("text")), sets))
+    val mc = TextFunctions.markerCounts(col("text"), langMarkerSets) // q24's binding
     val adv = advStrings.toDF("text")
     val docs = core.Tables.documents(spark, TestSpark.sfDir).select("text")
     Seq(adv, docs).foreach { df =>
