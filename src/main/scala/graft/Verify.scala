@@ -10,11 +10,15 @@ object Verify {
     val spark = graft.core.GraftSession.builder(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val queries = SparkEntry.queries
+    val failed = queries.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        val msg = Option(e.getMessage).getOrElse(e.toString)
+        System.err.println(s"[verify] $name failed: $msg")
+        Some(s"$name (${msg.linesIterator.nextOption().getOrElse("").trim})")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -33,5 +37,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // one summary line, so a run states what failed and why without
+    // grepping Spark's logs
+    System.err.println(s"[verify] ${queries.size - failed.size}/${queries.size} ok" +
+      (if (failed.isEmpty) "" else failed.mkString("; failed: ", ", ", "")))
   }
 }

@@ -25,18 +25,22 @@ object Relational {
   /** TPC-H Q1-shaped pricing summary: scan → filter → hash agg.
     * (reference analogue: the Q1 class histogram / groupBy-count shapes,
     * notebook cell 5; generalized to multi-aggregate.) */
-  def pricingSummary(s: SparkSession, d: String): DataFrame =
+  def pricingSummary(s: SparkSession, d: String): DataFrame = {
+    val discPrice = col("l_extendedprice") * (lit(1) - col("l_discount"))
+    val charge = discPrice * (lit(1) + col("l_tax"))
     Tables.lineitem(s, d)
       .filter(col("l_shipdate") <= to_timestamp(lit("1998-09-02")))
       // each summed value's unscaled parse is projected ONCE per row
-      // (see QueryUtils.unscaled18); the aggregate then works on longs
-      .withColumn("v_disc_price", col("l_extendedprice") * (lit(1) - col("l_discount")))
-      .withColumn("v_charge", col("v_disc_price") * (lit(1) + col("l_tax")))
-      .withColumn("u_qty", unscaled18(col("l_quantity")))
-      .withColumn("u_price", unscaled18(col("l_extendedprice")))
-      .withColumn("u_disc_price", unscaled18(col("v_disc_price")))
-      .withColumn("u_charge", unscaled18(col("v_charge")))
-      .withColumn("u_disc", unscaled18(col("l_discount")))
+      // (see QueryUtils.unscaled18); the aggregate then works on longs.
+      // One projection, so the builder is analyzed once, not per column
+      .select(col("*"),
+        discPrice.as("v_disc_price"),
+        charge.as("v_charge"),
+        unscaled18(col("l_quantity")).as("u_qty"),
+        unscaled18(col("l_extendedprice")).as("u_price"),
+        unscaled18(discPrice).as("u_disc_price"),
+        unscaled18(charge).as("u_charge"),
+        unscaled18(col("l_discount")).as("u_disc"))
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
         dsum(col("u_qty"), col("l_quantity")).as("sum_qty"),
@@ -47,6 +51,7 @@ object Relational {
         davg(col("u_disc"), col("l_discount")).as("avg_disc"),
         count(lit(1)).as("count_order"))
       .orderBy("l_returnflag", "l_linestatus")
+  }
 
   val pricingSummarySql: String =
     s"""SELECT l_returnflag, l_linestatus,
@@ -114,9 +119,9 @@ object Relational {
     * exact decimals, so summing the sums and rounding once at the end
     * is bit-identical to the flat spelling the oracle runs. */
   def revenueByNation(s: SparkSession, d: String): DataFrame = {
+    val rev = col("l_extendedprice") * (lit(1) - col("l_discount"))
     val liPerOrder = Tables.lineitem(s, d)
-      .withColumn("v_rev", col("l_extendedprice") * (lit(1) - col("l_discount")))
-      .withColumn("_u", unscaled18(col("v_rev")))
+      .select(col("l_orderkey"), rev.as("v_rev"), unscaled18(rev).as("_u"))
       .groupBy("l_orderkey")
       .agg(sumDecParts(col("_u"), col("v_rev")).as("rev"))
     val o = Tables.orders(s, d)
